@@ -28,8 +28,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--html", action="store_true",
                    help="extract main content from spans of kind 'html' "
                         "(DOM boilerplate strip, in-place span replacement)")
-    p.add_argument("--repartition", type=int, default=None,
-                   help="force blob repartitioning (skewed inputs)")
     args = p.parse_args(argv)
 
     # under spark-submit the session/master/memory come from the submit conf;
@@ -76,7 +74,6 @@ def main(argv: list[str] | None = None) -> None:
         resume=not args.no_resume,
         classify=args.classify,
         html=args.html,
-        repartition=args.repartition,
     )
     spark.stop()
 

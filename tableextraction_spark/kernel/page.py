@@ -33,18 +33,20 @@ def scale_bboxes(bboxes: np.ndarray, factor: float) -> np.ndarray:
     return (np.asarray(bboxes) * factor).astype(np.int64)
 
 
-def process_page(gray: np.ndarray, min_len_frac: float = 0.04, inset: int = OCR_INSET):
-    """uint8 gray page → list of (table_bbox, cells int[C,4], texts list[str]).
+def _page_pass(gray: np.ndarray):
+    """The per-page loop under :func:`process_page` and
+    :func:`extract_objects`: gray → ink → segments → clustered regions →
+    nodes → cells → OCR.  Returns ``(ink, horiz, vert, tables)`` with
+    ``tables`` a list of (table_bbox, cells int[C,4], texts list[str]).
 
-    Tables in reading order; cells in reading order; texts raw (hyphenation
-    cleanup happens at assembly, matching the reference which cleans after
-    OCR — ``recognition.py:151-164``).
+    Kernel stages are looked up as module globals at call time, so a
+    wrapper installed on this module sees every call.
     """
     gray = grayzation(gray)
     ink = binarize(gray)
-    horiz, vert = detect_segments(ink, min_len_frac)
+    horiz, vert = detect_segments(ink)
     ocr = resolve_ocr()  # pluggable strategy (template | easyocr | custom)
-    out = []
+    tables = []
     for bbox, hm, vm in cluster_tables(horiz, vert):
         tw, th = bbox[2] - bbox[0], bbox[3] - bbox[1]
         eps = max(2, int(0.01 * (tw + th)))  # detection.py ε = 1%·(h+w)
@@ -54,12 +56,22 @@ def process_page(gray: np.ndarray, min_len_frac: float = 0.04, inset: int = OCR_
             continue
         texts = ocr(
             [
-                gray[y1 + inset : y2 - inset + 1, x1 + inset : x2 - inset + 1]
+                gray[y1 + OCR_INSET : y2 - OCR_INSET + 1, x1 + OCR_INSET : x2 - OCR_INSET + 1]
                 for x1, y1, x2, y2 in cells
             ]
         )
-        out.append((bbox, cells, texts))
-    return out
+        tables.append((bbox, cells, texts))
+    return ink, horiz, vert, tables
+
+
+def process_page(gray: np.ndarray):
+    """uint8 gray page → list of (table_bbox, cells int[C,4], texts list[str]).
+
+    Tables in reading order; cells in reading order; texts raw (hyphenation
+    cleanup happens at assembly, matching the reference which cleans after
+    OCR — ``recognition.py:151-164``).
+    """
+    return _page_pass(gray)[3]
 
 
 def extract_objects(gray: np.ndarray, classify: bool = False):
@@ -75,27 +87,12 @@ def extract_objects(gray: np.ndarray, classify: bool = False):
     from .classify import classify_table
     from .plots import digitize_plot
 
-    gray = grayzation(gray)
-    ink = binarize(gray)
-    horiz, vert = detect_segments(ink, min_len_frac=0.04)
-    ocr = resolve_ocr()  # pluggable strategy (template | easyocr | custom)
-    objects = []
-    for bbox, hm, vm in cluster_tables(horiz, vert):
-        tw, th = bbox[2] - bbox[0], bbox[3] - bbox[1]
-        eps = max(2, int(0.01 * (tw + th)))
-        nodes = dedup_grid_fixpoint(snap_nodes(intersect_lines(vm, hm, eps), eps))
-        cells = cells_from_nodes(nodes, ink)
-        if len(cells) == 0:
-            continue
-        texts = ocr(
-            [
-                gray[y1 + OCR_INSET : y2 - OCR_INSET + 1, x1 + OCR_INSET : x2 - OCR_INSET + 1]
-                for x1, y1, x2, y2 in cells
-            ]
-        )
-        if classify and not classify_table(" ".join(texts)):
-            continue
-        objects.append(("table", len(cells), assemble_table(cells, texts)))
+    ink, horiz, vert, tables = _page_pass(gray)
+    objects = [
+        ("table", len(cells), assemble_table(cells, texts))
+        for _bbox, cells, texts in tables
+        if not classify or classify_table(" ".join(texts))
+    ]
     if not objects:
         plot = digitize_plot(ink, horiz, vert)
         if plot is not None:

@@ -145,6 +145,3 @@ def make_decode_detect_ocr(classify: bool = False):
                 yield out
 
     return decode_fn
-
-
-decode_detect_ocr = make_decode_detect_ocr(classify=False)

@@ -15,11 +15,9 @@ Input spans of kind ``html`` carry raw markup in ``text``; the DOM kernel
   counters ride along as columns for `html_stage_metrics`.
 
 * :func:`extract_html_objects` — the relational form: one row per extracted
-  span keyed by (doc_id, src_offset).  Useful when the extracted objects
-  are the query target (e.g. harvesting `<table>` structures corpus-wide
-  without assembling documents) and for splicing via
-  ``assemble_spans_sql(..., html=...)``; the in-place rewrite is preferred
-  for end-to-end extraction.
+  span keyed by (doc_id, src_offset), for queries whose target is the
+  extracted objects themselves (e.g. harvesting `<table>` structures
+  corpus-wide without assembling documents).
 
 Shared properties: a multi-MB html payload is one Arrow row (pandas batches
 bound memory via ``spark.sql.execution.arrow.maxRecordsPerBatch``,
@@ -57,8 +55,8 @@ def _html_spans(docs: DataFrame) -> DataFrame:
 
 def _null_offset(off) -> bool:
     """Shared guard: a null src_offset arrives as None/NaN; int() on it would
-    kill the task, and a sentinel could never match the assembly splice —
-    callers emit an observable error row instead."""
+    kill the task, and a sentinel offset would name no span — callers emit
+    an observable error row instead."""
     return off is None or pd.isna(off)
 
 # DOCS_SCHEMA + per-doc lineage counters (+ n_pages: the ORIGINAL media-span

@@ -170,8 +170,8 @@ def q51_chunk_dedup_stats(spark, sf_dir):
             "doc_id",
             "n_chunks",
             "n_dup_chunks",
-            "ROUND(1.0 - n_dup_chunks / CAST(n_chunks AS DOUBLE), 4)"
-            " AS kept_frac",
+            # basis points by integer division: exact on both engines
+            "(n_chunks - n_dup_chunks) * 10000 DIV n_chunks AS kept_bp",
         )
     )
 
@@ -188,7 +188,7 @@ ch AS (SELECT doc_id,
        FROM cx),
 corpus AS (SELECT h, COUNT(*) AS n_corpus FROM ch GROUP BY 1)
 SELECT doc_id, n_chunks, n_dup_chunks,
-       ROUND(1.0 - n_dup_chunks / CAST(n_chunks AS DOUBLE), 4) AS kept_frac
+       CAST((n_chunks - n_dup_chunks) * 10000 // n_chunks AS BIGINT) AS kept_bp
 FROM (
   SELECT ch.doc_id, COUNT(*) AS n_chunks,
          SUM(CAST(corpus.n_corpus > 1 AS INT)) AS n_dup_chunks

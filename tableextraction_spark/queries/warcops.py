@@ -140,24 +140,24 @@ def q53_warc_ingest_verify(spark, sf_dir):
         )
     )
 
-    # --- per-file shape: html rows = 2 + i%3, one 404, zero error rows ---
+    # --- per-file shape: html records = 2 + i%3, one 404, zero error rows ---
     want_shape = idx.select(
         F.concat(
             F.lit("crawl/part-"), F.lpad(F.col("i").cast("string"), 4, "0"),
             # mirror of the generator's container rotation (gz / zst)
             F.when(F.col("i") % 3 == 2, ".warc.zst").otherwise(".warc.gz"),
         ).alias("warc_path"),
-        (F.lit(2) + F.col("i") % 3).cast("long").alias("want_html_rows"),
+        (F.lit(2) + F.col("i") % 3).cast("long").alias("want_html_records"),
         F.lit(1).cast("long").alias("want_404"),
         F.lit(0).cast("long").alias("want_errors"),
     )
     got_shape = docs.groupBy("warc_path").agg(
-        F.sum(F.expr("CAST(content_type = 'text/html' AS INT)")).alias("got_html_rows"),
+        F.sum(F.expr("CAST(content_type = 'text/html' AS INT)")).alias("got_html_records"),
         F.sum(F.expr("CAST(http_status = 404 AS INT)")).alias("got_404"),
         F.sum(F.expr("CAST(error IS NOT NULL AS INT)")).alias("got_errors"),
     )
     shape_checks = [
-        ("html_rows", "got_html_rows", "want_html_rows"),
+        ("html_records", "got_html_records", "want_html_records"),
         ("rows_404", "got_404", "want_404"),
         ("error_rows", "got_errors", "want_errors"),
     ]

@@ -1,10 +1,11 @@
 """SparkSession factory with the engine's tuned defaults.
 
 Local mode here stands in for a multi-executor cluster: parallelism is
-``local[$SPARK_GRAFT_CPUS]`` (default 32), shuffle partitions sized to cores
-(not the 200 default), AQE on for runtime coalesce/skew handling, Arrow
-enabled with a bounded batch size so a batch of decoded pages (~0.5 MB each)
-never blows executor memory (SURVEY.md §4.3 spill/memory budget).
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may run on),
+shuffle partitions sized to cores (not the 200 default), AQE on for runtime
+coalesce/skew handling, Arrow enabled with a bounded batch size so a batch
+of decoded pages (~0.5 MB each) never blows executor memory (SURVEY.md §4.3
+spill/memory budget).
 """
 
 from __future__ import annotations
@@ -65,7 +66,7 @@ def get_spark(
     driver_memory: str = "16g",
     warehouse_dir: str | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""

@@ -1,6 +1,6 @@
 """End-to-end HTML main-content extraction through the Spark pipeline:
-mixed raster+markup corpora, SQL↔pandas assembly parity, raster-path
-no-regression with the html flag on, and per-row failure isolation."""
+mixed raster+markup corpora, raster-path no-regression with the html flag
+on, and per-row failure isolation."""
 
 import pandas as pd
 import pytest
@@ -42,17 +42,6 @@ def test_mixed_corpus_span_equality(spark, mixed):
     for doc_id, exp in expected.items():
         exp_t = [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in exp["spans"]]
         assert out[doc_id] == exp_t, doc_id
-
-
-def test_pandas_assembly_parity_with_html(spark, mixed):
-    docs_df, blobs_df, _ = mixed
-    sql_out = _tuples(extract_spans(spark, docs_df, blobs_df, html=True).collect())
-    pd_out = _tuples(
-        extract_spans(
-            spark, docs_df, blobs_df, html=True, use_pandas_assembly=True
-        ).collect()
-    )
-    assert sql_out == pd_out
 
 
 def test_html_flag_noop_on_raster_corpus(spark):
@@ -104,32 +93,35 @@ def test_html_failure_isolated_per_row(spark, monkeypatch):
     assert list(ok["doc_id"]) == ["d2"] and list(ok["text"]) == ["fine"]
 
 
-def test_error_rows_dropped_by_assembly(spark):
-    """An html span whose extraction errored is dropped from the output (like
-    a corrupt blob page) while the rest of the document survives."""
-    from tableextraction_spark.operators.assemble import assemble_spans_sql
-    from tableextraction_spark.operators.html_extract import HTML_OBJS_SCHEMA
-    from tableextraction_spark.pipeline import TABLES_SCHEMA
+def test_rewrite_drops_failed_markup_span(monkeypatch):
+    """The in-place rewrite drops an html span whose extractor raises (like
+    a corrupt blob page), keeps its neighbours with offsets renumbered
+    0..n-1, and counts the failure in ``html_errors``."""
+    import tableextraction_spark.htmlx as htmlx
+    from tableextraction_spark.operators.html_extract import _rewrite_batches
 
-    docs = spark.createDataFrame(
-        [
-            {
-                "doc_id": "d1",
-                "spans": [
-                    {"kind": "text", "text": "pre", "media_ref": "", "offset": 0},
-                    {"kind": "html", "text": "<x>", "media_ref": "", "offset": 1},
-                    {"kind": "text", "text": "post", "media_ref": "", "offset": 2},
-                ],
-            }
-        ],
-        DOCS_SCHEMA,
-    )
-    tables = spark.createDataFrame([], TABLES_SCHEMA)
-    hobjs = spark.createDataFrame(
-        [("d1", 1, -1, "error", "", "", "ValueError('x')")], HTML_OBJS_SCHEMA
-    )
-    out = _tuples(assemble_spans_sql(docs, tables, html=hobjs).collect())
-    assert out["d1"] == [("text", "pre", "", 0), ("text", "post", "", 1)]
+    real = htmlx.extract_main_spans
+
+    def boom(markup):
+        if "BOOM" in markup:
+            raise ValueError("kernel crash")
+        return real(markup)
+
+    monkeypatch.setattr(htmlx, "extract_main_spans", boom)
+    spans = [
+        {"kind": "text", "text": "pre", "media_ref": "", "offset": 0},
+        {"kind": "html", "text": "<p>BOOM</p>", "media_ref": "", "offset": 1},
+        {"kind": "html", "text": "<p>fine</p>", "media_ref": "", "offset": 2},
+        {"kind": "text", "text": "post", "media_ref": "", "offset": 3},
+    ]
+    pdf = pd.DataFrame({"doc_id": ["d1"], "spans": [spans]})
+    (row,) = pd.concat(list(_rewrite_batches([pdf]))).to_dict("records")
+    assert [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in row["spans"]] == [
+        ("text", "pre", "", 0),
+        ("text", "fine", "", 1),
+        ("text", "post", "", 2),
+    ]
+    assert (row["html_errors"], row["html_parsed"]) == (1, 1)
 
 
 def test_html_plan_zero_exchanges(spark):

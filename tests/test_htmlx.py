@@ -271,7 +271,7 @@ def test_three_header_rows_demote_not_drop():
 
 def test_null_src_offset_isolated_per_row():
     """NaN offset: no task kill, and the loss is an OBSERVABLE error row —
-    a sentinel offset would silently never match the assembly splice."""
+    a sentinel offset would silently name no span."""
     import pandas as pd
 
     from tableextraction_spark.operators.html_extract import _parse_batches

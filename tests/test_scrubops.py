@@ -57,10 +57,10 @@ def test_q51_counts_cross_corpus_duplicate_chunks(spark, tmp_docs):
     out = {r.doc_id: r for r in q51_chunk_dedup_stats(spark, sf).collect()}
     # the 10-word boilerplate chunk repeats across docs 1 and 2
     assert out[1].n_chunks == 2 and out[1].n_dup_chunks == 1
-    assert out[1].kept_frac == 0.5
+    assert out[1].kept_bp == 5000
     # doc 2: boilerplate duplicates doc 1, its uniq2 chunk duplicates doc 3
     assert out[2].n_chunks == 2 and out[2].n_dup_chunks == 2
-    assert out[2].kept_frac == 0.0
+    assert out[2].kept_bp == 0
     # doc 3's first chunk equals doc 2's second chunk (same 10 words);
     # its 1-word tail chunk is unique
     assert out[3].n_chunks == 2 and out[3].n_dup_chunks == 1

@@ -2,9 +2,14 @@
 (and separate runs) still yields exactly ONE correct span row — the
 completeness check holds it in state until every page arrived."""
 
+import json
+
+import pandas as pd
+
 from tableextraction_spark.fixtures import gen_corpus
+from tableextraction_spark.operators import TABLES_SCHEMA, assemble_spans_sql
 from tableextraction_spark.pipeline import BLOBS_SCHEMA, DOCS_SCHEMA
-from tableextraction_spark.streaming.stateful_assembly import run_stateful
+from tableextraction_spark.streaming.stateful_assembly import _update_doc, run_stateful
 
 
 def _tuples(rows):
@@ -24,6 +29,83 @@ def _exp_tuples(expected):
         ]
         for e in expected
     }
+
+
+def _span(kind, text, offset, media_ref=""):
+    return {"kind": kind, "text": text, "media_ref": media_ref, "offset": offset}
+
+
+# crafted docs: a raw html span next to a media page; out-of-order offsets;
+# a media page with two objects (listed out of obj_no order) and one with
+# none; page markers (obj_no = -1) and error rows that must not become spans
+_MERGE_DOCS = {
+    "d1": [
+        _span("text", "intro", 0),
+        _span("html", "<p>raw</p>", 1),
+        _span("media", "", 2, "m1"),
+    ],
+    "d2": [
+        _span("text", "tail", 3),
+        _span("media", "", 1, "m3"),
+        _span("text", "head", 0),
+        _span("media", "", 2, "m2"),
+    ],
+    "d3": [_span("media", "", 0, "m4"), _span("html", "<b>x</b>", 1)],
+}
+# (doc_id, media_ref, page_no, obj_no, kind, payload, error)
+_MERGE_OBJS = [
+    ("d1", "m1", 0, -1, None, None, None),
+    ("d1", "m1", 0, 0, "table", '{"t": 1}', None),
+    ("d2", "m2", 1, 1, "plot", '{"p": 2}', None),
+    ("d2", "m2", 1, -1, None, None, None),
+    ("d2", "m2", 1, 0, "table", '{"t": 2}', None),
+    ("d2", "m3", 0, -1, None, None, None),
+    ("d3", "m4", 0, 0, "table", '{"bad": 1}', "ValueError('late')"),
+    ("d3", "m4", 0, -1, None, None, "ValueError('decode')"),
+]
+
+
+class _FreshState:
+    exists = False
+
+    def update(self, _value):
+        raise AssertionError("every crafted doc is complete in one batch")
+
+    def remove(self):
+        pass
+
+
+def test_stateful_merge_matches_batch_assembly(spark):
+    """The streaming state function (merge_doc_spans) and the batch
+    Catalyst assembly give the same spans for the same doc and object rows."""
+    rows = [
+        {"doc_id": d, "media_ref": ref, "page_no": pno, "obj_no": obj,
+         "kind": kind, "n_items": 0, "payload": payload, "error": err,
+         "wall_ms": 0}
+        for d, ref, pno, obj, kind, payload, err in _MERGE_OBJS
+    ]
+    docs_df = spark.createDataFrame(
+        [{"doc_id": d, "spans": spans} for d, spans in _MERGE_DOCS.items()],
+        DOCS_SCHEMA,
+    )
+    batch = _tuples(
+        assemble_spans_sql(docs_df, spark.createDataFrame(rows, TABLES_SCHEMA)).collect()
+    )
+
+    stream = {}
+    for d, spans in _MERGE_DOCS.items():
+        pdf = pd.DataFrame([r for r in rows if r["doc_id"] == d])
+        pdf["spans_json"] = json.dumps(spans)
+        pdf["n_pages"] = sum(s["kind"] == "media" for s in spans)
+        (out,) = _update_doc((d,), [pdf], _FreshState())
+        stream[d] = [
+            (s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in out.loc[0, "spans"]
+        ]
+    assert stream == batch
+    assert batch["d1"][1] == ("html", "<p>raw</p>", "", 1)
+    assert [k for k, *_ in batch["d2"]] == ["text", "media", "media", "table", "plot", "text"]
+    assert [k for k, *_ in batch["d3"]] == ["media", "html"]
 
 
 def test_split_doc_across_microbatches_one_row(spark, tmp_path):
