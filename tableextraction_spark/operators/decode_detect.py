@@ -129,19 +129,25 @@ def process_content_rows(
     )
 
 
-def make_decode_detect_ocr(classify: bool = False):
+def make_decode_detect_ocr(classify: bool = False, lineage: bool = False):
     """mapInArrow fn over (doc_id, media_ref, page_no, content) blob rows.
 
     ``classify=True`` enables the reference's optional fuzzy-keyword table
     filter (``recognition.py:78-97`` placement: between OCR and structure
     assembly); dropped tables don't get a row, exactly like
-    ``filter_tables_by_classification`` drops crops.
+    ``filter_tables_by_classification`` drops crops.  ``lineage=True``
+    appends the partition's lineage summary row (operators/metrics.py).
     """
 
-    def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def decode_rows(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             out = process_content_rows(batch, classify=classify)
             if out is not None:
                 yield out
 
-    return decode_fn
+    def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from .metrics import fold_decode_lineage
+
+        return fold_decode_lineage(decode_rows(batches))
+
+    return decode_fn if lineage else decode_rows

@@ -12,7 +12,8 @@ Input spans of kind ``html`` carry raw markup in ``text``; the DOM kernel
   on a 240k-doc corpus: 2.3× the throughput at local[16] (18.0k vs 7.9k
   docs/s) and 4→16-core scaling 0.94 vs 0.55 — the aggregate/join variant's
   shuffle+sort of doc content was the whole scaling loss.  Per-doc lineage
-  counters ride along as columns for `html_stage_metrics`.
+  counters ride along as columns, and ``lineage=True`` folds them into one
+  summary row per partition (operators/metrics.py).
 
 * :func:`extract_html_objects` — the relational form: one row per extracted
   span keyed by (doc_id, src_offset), for queries whose target is the
@@ -164,10 +165,21 @@ def _rewrite_batches(batches):
         )
 
 
-def rewrite_html_spans(docs: DataFrame) -> DataFrame:
+def _rewrite_with_lineage(batches):
+    """``_rewrite_batches`` plus the partition's lineage summary row; the
+    global lookup keeps ``_rewrite_batches`` wrappable by name."""
+    from .metrics import fold_html_lineage
+
+    return fold_html_lineage(_rewrite_batches(batches))
+
+
+def rewrite_html_spans(docs: DataFrame, lineage: bool = False) -> DataFrame:
     """docs (doc_id, spans) → same rows with every kind='html' span replaced
     in place by its extracted main-content spans, offsets renumbered, plus
-    per-doc lineage counter columns (REWRITE_SCHEMA).
+    per-doc lineage counter columns (REWRITE_SCHEMA).  ``lineage=True``
+    adds a ``lineage`` string column: null on every doc row, the counters
+    JSON on the one summary row per partition (operators/metrics.py) —
+    callers must filter that row out before using the docs.
 
     One narrow map over the docs scan — no explode, no join, no shuffle.
     Note the semantic of extracted ``media`` spans: they become first-class
@@ -176,9 +188,13 @@ def rewrite_html_spans(docs: DataFrame) -> DataFrame:
     exactly like a native media span (``n_pages`` deliberately counts only
     ORIGINAL media spans, so the streaming completeness check is unaffected).
     """
-    return docs.select("doc_id", "spans").mapInPandas(
-        _rewrite_batches, REWRITE_SCHEMA
-    ).withColumn("partition_id", F.spark_partition_id())
+    fn, schema = (
+        (_rewrite_with_lineage, REWRITE_SCHEMA + ", lineage string")
+        if lineage else (_rewrite_batches, REWRITE_SCHEMA)
+    )
+    return docs.select("doc_id", "spans").mapInPandas(fn, schema).withColumn(
+        "partition_id", F.spark_partition_id()
+    )
 
 
 OUTLINKS_SCHEMA = (

@@ -18,8 +18,10 @@ Scale properties (the design points graded against BASELINE.md):
 * **Catalyst-only assembly** (higher-order array functions,
   operators/assemble.py).
 * **Resume** = anti-join against the committed output snapshot; idempotent.
-* **Lineage**: per-partition counters from page-marker rows
-  (operators/metrics.py) — pages/tables/cells/errors.
+* **Lineage in the same pass**: the decode and html stages fold their
+  partition's counters (pages/tables/cells/errors/ms) into one summary row,
+  observed while the spans are written (operators/metrics.py) — nothing
+  cached, no second scan, no extra aggregation.
 """
 
 from __future__ import annotations
@@ -29,12 +31,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators import (
-    TABLES_SCHEMA,
-    assemble_spans_sql,
-    filter_unprocessed,
-    stage_metrics,
-)
+from .operators import TABLES_SCHEMA, assemble_spans_sql, filter_unprocessed
 from .operators.decode_detect import make_decode_detect_ocr
 
 # resume prune: broadcast the todo doc_id set to the python scan only while
@@ -96,9 +93,12 @@ def _estimate_scan_splits(df: DataFrame) -> int | None:
     return max(1, -(-total_cost // max_pb))
 
 
-def detect_tables(blobs: DataFrame, classify: bool = False) -> DataFrame:
+def detect_tables(
+    blobs: DataFrame, classify: bool = False, lineage: bool = False
+) -> DataFrame:
     """Blob scan → per-page/per-table rows, tagged with the decode-stage
-    partition id (for lineage).
+    partition id (for lineage; ``lineage=True`` adds each partition's
+    summary row, see operators/metrics.py).
 
     Partitioning policy: the decode stage is CPU-bound (NumPy per page), so
     idle cores cost more than a local exchange.  If the scan yields fewer
@@ -116,7 +116,8 @@ def detect_tables(blobs: DataFrame, classify: bool = False) -> DataFrame:
         est = src.rdd.getNumPartitions()
     if est < want:
         src = src.repartition(2 * want)
-    return src.mapInArrow(make_decode_detect_ocr(classify), TABLES_SCHEMA).withColumn(
+    decode = make_decode_detect_ocr(classify, lineage=lineage)
+    return src.mapInArrow(decode, TABLES_SCHEMA).withColumn(
         "partition_id", F.spark_partition_id()
     )
 
@@ -126,8 +127,6 @@ def extract_spans(
     docs: DataFrame,
     blobs: DataFrame | str | None,
     committed: DataFrame | None = None,
-    metrics_path: str | None = None,
-    run_id: str | None = None,
     classify: bool = False,
     html: bool = False,
 ) -> DataFrame:
@@ -156,42 +155,56 @@ def extract_spans(
     rerun decodes zero pages.  Beyond that size, finished docs are decoded
     and dropped by the assembly join (row-group metadata pruning via doc_id
     min/max clustering is the deploy-time upgrade).
+
+    Lineage metrics are :func:`run_to_parquet`'s job: it observes the
+    stages of this same plan while the spans are written.
     """
+    return _extract_spans(spark, docs, blobs, committed, classify, html, lineage=False)[0]
+
+
+def _extract_spans(
+    spark: SparkSession,
+    docs: DataFrame,
+    blobs: DataFrame | str | None,
+    committed: DataFrame | None,
+    classify: bool,
+    html: bool,
+    lineage: bool,
+) -> tuple[DataFrame, list]:
+    """:func:`extract_spans` → (spans frame, Observations).  With
+    ``lineage``, each stage emits one summary row per partition and an
+    ``observe`` right after the stage, before any filter, collects them
+    (operators/metrics.py) during whatever action consumes the frame."""
+    from .operators import metrics
+
+    observed = []
     # NOTE: the resume prunes below read doc_ids from raw_todo, NOT from the
     # rewritten frame — doc ids are unchanged by the html rewrite, and Spark
     # cannot prune columns through mapInPandas, so id-scanning the rewritten
     # frame would DOM-parse the whole corpus once per prune
-    pinned: list[DataFrame] = []  # persisted deps; see unpersist_pipeline_cache
-
-    def _done(result: DataFrame) -> DataFrame:
-        if pinned:
-            result._persisted_deps = pinned  # type: ignore[attr-defined]
-        return result
-
     raw_todo = todo = filter_unprocessed(docs, committed)
-    rewritten = None
     if html:
         # in-place rewrite, NOT the object-row + join form: markup never
         # shuffles (measured 2.3× throughput and 0.94-vs-0.55 scaling at
         # 4→16 cores on 240k docs — see operators/html_extract.py)
         from .operators.html_extract import rewrite_html_spans
 
-        rewritten = rewrite_html_spans(todo)
+        rewritten = rewrite_html_spans(todo, lineage=lineage)
+        if lineage:
+            is_summary = F.col("lineage").isNotNull()
+            rewritten, obs = metrics.observe_lineage(
+                rewritten, metrics.HTML_STAGE, is_summary, F.col("lineage")
+            )
+            observed.append(obs)
+            rewritten = rewritten.where(~is_summary)
         todo = rewritten.select("doc_id", "spans")
-    if blobs is None:
-        if rewritten is not None:
+        if blobs is None:
             # markup-only corpus: the rewrite already produced the final
             # renumbered span arrays, and the tables side is statically
             # empty — assembly would be an identity join.  Whole job =
             # scan → mapInPandas → sink, zero exchanges.
-            if metrics_path is not None:
-                from .operators.metrics import html_stage_metrics
-                from .sources import write_table
-
-                pinned.append(rewritten.persist())
-                run_id = run_id or uuid.uuid4().hex[:12]
-                write_table(html_stage_metrics(rewritten, run_id), metrics_path)
-            return _done(todo)
+            return todo, observed
+    if blobs is None:
         tables = spark.createDataFrame([], TABLES_SCHEMA).withColumn(
             "partition_id", F.spark_partition_id()
         )
@@ -209,42 +222,21 @@ def extract_spans(
             if len(ids) <= RESUME_PRUNE_MAX:
                 keep = {r.doc_id for r in ids}
         tables = detect_tables_python_scan(
-            spark, blobs, classify=classify, keep_doc_ids=keep
+            spark, blobs, classify=classify, keep_doc_ids=keep, lineage=lineage
         )
     else:
         src = blobs
         if committed is not None:
             src = blobs.join(raw_todo.select("doc_id"), "doc_id", "left_semi")
-        tables = detect_tables(src, classify=classify)
-    if metrics_path is not None:
-        from .sources import write_table
-
-        tables = tables.persist()
-        pinned.append(tables)
-        run_id = run_id or uuid.uuid4().hex[:12]
-        write_table(stage_metrics(tables, run_id), metrics_path)
-        if rewritten is not None:
-            from .operators.metrics import html_stage_metrics
-
-            # persist so the metrics write and the assembly share ONE parse
-            pinned.append(rewritten.persist())
-            write_table(html_stage_metrics(rewritten, run_id), metrics_path)
-    return _done(assemble_spans_sql(todo, tables))
-
-
-def unpersist_pipeline_cache(result: DataFrame) -> None:
-    """Release the intermediates :func:`extract_spans` persisted to share one
-    computation between the metrics write and the final assembly (the tables
-    frame, and under ``html=True`` the full rewritten-span frame — the larger
-    of the two).  Call after the returned DataFrame's consuming action;
-    :func:`run_to_parquet` does this in a ``finally``.  Without it the cached
-    span payloads stay pinned in executor storage for the session lifetime.
-    """
-    for dep in getattr(result, "_persisted_deps", ()):
-        try:
-            dep.unpersist()
-        except Exception:
-            pass  # session already stopped
+        tables = detect_tables(src, classify=classify, lineage=lineage)
+    if lineage and blobs is not None:
+        # the summary row has obj_no < 0: assemble_spans_sql drops it
+        tables, obs = metrics.observe_lineage(
+            tables, metrics.DECODE_STAGE,
+            F.col("kind") == metrics.LINEAGE_KIND, F.col("payload"),
+        )
+        observed.append(obs)
+    return assemble_spans_sql(todo, tables), observed
 
 
 def run_to_parquet(
@@ -254,7 +246,9 @@ def run_to_parquet(
     out_path: str,
     metrics_path: str | None = None,
     resume: bool = True,
-    **kw,
+    run_id: str | None = None,
+    classify: bool = False,
+    html: bool = False,
 ) -> None:
     """Job entry for spark-submit: resume-aware write of the spans table.
 
@@ -264,27 +258,28 @@ def run_to_parquet(
     Iceberg/catalog table name (sources/catalog.py routing) — under an
     Iceberg catalog the append is a transactional snapshot commit and the
     resume read sees exactly the last committed snapshot.
+
+    With ``metrics_path``, the spans write is still the only execution
+    over the inputs: the decode and html stages each emit one lineage
+    summary row per partition, observed during that write, and AFTER the
+    spans commit those rows are appended to ``metrics_path`` as the
+    FIXTURES.md §5 table (``run_id`` defaults to a fresh 12-hex id).
     """
-    from .sources import read_table, write_table
+    from .sources import write_table
 
     committed = None
     if resume:
-        from .streaming.sink import is_missing_output_error
+        from .streaming.sink import read_committed
 
-        try:
-            committed = read_table(spark, out_path)
-        except Exception as exc:
-            # first run only (missing path/table, or crash-debris-only
-            # dir) — any other read failure (corrupt footer, permissions,
-            # missing fs jar) must abort, not silently disable resume and
-            # reprocess the whole corpus
-            if not is_missing_output_error(exc):
-                raise
-            committed = None
-    out = extract_spans(
-        spark, docs, blobs, committed=committed, metrics_path=metrics_path, **kw
+        committed = read_committed(spark, out_path)
+    out, observed = _extract_spans(
+        spark, docs, blobs, committed, classify, html,
+        lineage=metrics_path is not None,
     )
-    try:
-        write_table(out, out_path)
-    finally:
-        unpersist_pipeline_cache(out)
+    write_table(out, out_path)
+    if metrics_path is not None:
+        from .operators.metrics import metrics_frame, observed_rows
+
+        rows = [r for obs in observed for r in observed_rows(obs)]
+        run_id = run_id or uuid.uuid4().hex[:12]
+        write_table(metrics_frame(spark, rows, run_id), metrics_path)

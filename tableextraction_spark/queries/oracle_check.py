@@ -15,8 +15,10 @@ TABLES = (
 
 
 def _norm_cell(v) -> str:
+    # full precision, as strict as the correctness gate's hash: a 1-ulp float
+    # difference is a mismatch
     if isinstance(v, float):
-        return f"{v:.6g}"
+        return repr(v)
     return str(v)
 
 

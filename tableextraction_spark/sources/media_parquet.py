@@ -321,11 +321,14 @@ def detect_tables_python_scan(
     blobs_path: str,
     classify: bool = False,
     keep_doc_ids: frozenset[str] | set[str] | None = None,
+    lineage: bool = False,
 ) -> DataFrame:
     """(file, row_group) splits → fused python-side read+decode+detect+OCR.
 
     Output schema/content identical to ``pipeline.detect_tables`` on a JVM
-    scan of the same table (asserted in tests).
+    scan of the same table (asserted in tests).  ``lineage=True`` appends
+    each partition's lineage summary row (operators/metrics.py); only
+    ``pipeline`` asks for it.
 
     ``keep_doc_ids`` is the resume prune: when given (the broadcast *todo*
     set), rows of other documents are dropped after the cheap column read
@@ -398,10 +401,7 @@ def detect_tables_python_scan(
         else None
     )
 
-    def read_and_process(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
+    def scan_rows(batches, pid):
         for b in batches:
             paths = b.column("path").to_pylist()
             rgs = b.column("rg").to_pylist()
@@ -517,6 +517,16 @@ def detect_tables_python_scan(
                     out = process_content_rows(rb, classify=classify, partition_id=pid)
                     if out is not None:
                         yield out
+
+    def read_and_process(batches):
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
+        if not lineage:
+            return scan_rows(batches, pid)
+        from ..operators.metrics import fold_decode_lineage
+
+        return fold_decode_lineage(scan_rows(batches, pid), pid)
 
     schema = TABLES_SCHEMA + ", partition_id int"
     return sdf.mapInArrow(read_and_process, schema)

@@ -19,11 +19,13 @@ batch-bounded), and only the resulting duplicate set (≤ batch size) is
 broadcast back for the left-anti.  Driver memory is O(#batches) frame
 references; the id data itself lives on the executors.
 
-Error discipline: only the signatures of "no committed output yet" —
-missing path, missing catalog table, or a directory holding nothing but
-crash debris (`_temporary` → 'Unable to infer schema') — are treated as
-first-run; any other read failure (corrupt footer, permissions, missing
-filesystem jar) aborts the run rather than silently disabling dedup.
+Error discipline: a path output is first checked on the filesystem —
+missing, or holding nothing but crash debris (`_temporary`), is first-run
+without any read.  Past that check, only the signatures of "no committed
+output yet" (missing path, missing catalog table, 'Unable to infer
+schema') are treated as first-run; any other read failure (corrupt footer,
+permissions, missing filesystem jar) aborts the run rather than silently
+disabling dedup.
 """
 
 from __future__ import annotations
@@ -47,6 +49,49 @@ def is_missing_output_error(exc: Exception) -> bool:
     return any(tag in msg for tag in _MISSING_OUTPUT_TAGS)
 
 
+def _path_has_data(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists and holds anything but hidden/crash-debris
+    entries (``_temporary``, ``_SUCCESS``, dotfiles) — asked of the Hadoop
+    filesystem, so a first run never triggers a failed read.  A failed
+    analysis is not free: once a session has run any ``observe``, each one
+    logs a listener ERROR with a full stack trace."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return False
+    if fs.getFileStatus(p).isFile():
+        return True
+    return any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(p)
+    )
+
+
+def read_committed(spark: SparkSession, ref: str, read=None) -> DataFrame | None:
+    """The committed output at ``ref``, or None before the first commit.
+    ``read(spark, ref)`` defaults to sources.read_table (path, native
+    Iceberg or catalog routing).  Path refs are checked for data first;
+    what the check lets through, and every catalog ref, is read, and only
+    the missing-output signatures (:func:`is_missing_output_error`) count
+    as a first run — any other failure (corrupt footer, permissions,
+    missing fs jar) aborts rather than silently reprocessing everything."""
+    from ..sources import NATIVE_ICEBERG_SCHEME, is_path, read_table
+
+    if (
+        not ref.startswith(NATIVE_ICEBERG_SCHEME)
+        and is_path(ref, spark)
+        and not _path_has_data(spark, ref)
+    ):
+        return None
+    try:
+        return (read or read_table)(spark, ref)
+    except Exception as exc:
+        if is_missing_output_error(exc):
+            return None
+        raise
+
+
 class IdempotentSink:
     """Append-only parquet sink deduplicating on doc_id across runs AND
     within the current run.
@@ -60,12 +105,7 @@ class IdempotentSink:
     def __init__(self, spark: SparkSession, out_path: str):
         self.spark = spark
         self.out_path = out_path
-        try:
-            committed = spark.read.parquet(out_path).select("doc_id")
-        except Exception as exc:
-            if not is_missing_output_error(exc):
-                raise
-            committed = None
+        committed = read_committed_ids(spark, out_path)
         self.committed = committed.cache() if committed is not None else None
         # per-batch localCheckpointed (doc_id) frames written THIS run;
         # driver holds only the references, the data lives on executors
@@ -113,10 +153,7 @@ class IdempotentSink:
 
 
 def read_committed_ids(spark: SparkSession, out_path: str) -> DataFrame | None:
-    """(doc_id) frame of the committed output, or None before first write."""
-    try:
-        return spark.read.parquet(out_path).select("doc_id")
-    except Exception as exc:
-        if is_missing_output_error(exc):
-            return None
-        raise
+    """(doc_id) frame of the committed parquet output, or None before the
+    first write."""
+    committed = read_committed(spark, out_path, lambda s, p: s.read.parquet(p))
+    return None if committed is None else committed.select("doc_id")

@@ -330,14 +330,15 @@ def test_incremental_streaming_html(spark, tmp_path):
 def test_html_lineage_metrics(spark, tmp_path):
     """metrics_path + html=True writes a second stage's per-partition
     counters (html_extract) next to the decode stage's, same schema."""
+    from tableextraction_spark.pipeline import run_to_parquet
+
     rdocs, blobs, _ = gen_corpus(2)
     hdocs, _ = zip(*(gen_html_doc(i) for i in range(3)))
     docs_df = spark.createDataFrame(rdocs + list(hdocs), DOCS_SCHEMA)
     blobs_df = spark.createDataFrame(blobs, BLOBS_SCHEMA)
     mpath = str(tmp_path / "metrics")
-    extract_spans(
-        spark, docs_df, blobs_df, html=True, metrics_path=mpath, run_id="h1"
-    ).write.format("noop").mode("overwrite").save()
+    run_to_parquet(spark, docs_df, blobs_df, str(tmp_path / "out"),
+                   metrics_path=mpath, run_id="h1", html=True)
     m = spark.read.parquet(mpath)
     stages = {r.stage for r in m.select("stage").distinct().collect()}
     assert stages == {"decode_detect_ocr", "html_extract"}

@@ -70,25 +70,36 @@ def test_resume_anti_join_skips_committed(spark, corpus):
 
 
 def test_metrics_lineage(spark, corpus, tmp_path):
+    from tableextraction_spark.pipeline import run_to_parquet
+
     docs_df, blobs_df, expected = corpus
     mpath = str(tmp_path / "metrics")
-    extract_spans(spark, docs_df, blobs_df, metrics_path=mpath, run_id="t1").count()
+    run_to_parquet(spark, docs_df, blobs_df, str(tmp_path / "out"),
+                   metrics_path=mpath, run_id="t1")
     m = spark.read.parquet(mpath)
     agg = m.groupBy("run_id").sum("pages_decoded", "tables_detected", "errors").collect()[0]
     n_pages = sum(1 for e in expected for s in e["spans"] if s["kind"] == "media")
     n_tables = sum(1 for e in expected for s in e["spans"] if s["kind"] == "table")
+    assert agg["run_id"] == "t1"
     assert agg["sum(pages_decoded)"] == n_pages
     assert agg["sum(tables_detected)"] == n_tables
     assert agg["sum(errors)"] == 0
     assert m.count() >= 1  # per-partition rows exist
 
 
-def test_metrics_persist_released_after_consume(spark, corpus, tmp_path):
-    """The frames extract_spans pins to share one computation between the
-    metrics write and the assembly must be releasable — and run_to_parquet's
-    finally must actually release them (no session-lifetime storage leak)."""
+def test_run_to_parquet_persists_nothing(spark, corpus, tmp_path, monkeypatch):
+    """Lineage rides the spans write: no persist/cache anywhere in the job
+    (the metrics used to pin the tables and rewritten frames), and no RDD
+    is left pinned afterwards."""
+    from pyspark.sql import DataFrame
+
     from tableextraction_spark.pipeline import run_to_parquet
 
+    def refuse(self, *a, **k):
+        raise AssertionError("run_to_parquet persisted a frame")
+
+    monkeypatch.setattr(DataFrame, "persist", refuse)
+    monkeypatch.setattr(DataFrame, "cache", refuse)
     docs_df, blobs_df, _ = corpus
     sc = spark.sparkContext
     before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
@@ -99,9 +110,10 @@ def test_metrics_persist_released_after_consume(spark, corpus, tmp_path):
         str(tmp_path / "out"),
         metrics_path=str(tmp_path / "metrics"),
         resume=False,
+        html=True,
     )
     after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    assert after <= before, "pipeline persist leaked past run_to_parquet"
+    assert after == before, "run_to_parquet left an RDD pinned"
 
 
 def test_corrupt_blob_isolated_not_fatal(spark, corpus):

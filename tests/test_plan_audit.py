@@ -245,3 +245,41 @@ def test_extraction_jvm_scan_path_prunes_blob_columns(spark, tmp_path):
     cols = {c.split("#")[0] for c in m.group(1).split(",") if c}
     assert cols == {"doc_id", "media_ref", "page_no", "content"}
     assert "crawl_meta" not in plan
+
+
+def test_run_to_parquet_lineage_costs_at_most_one_job(spark, tmp_path):
+    """Lineage rides the spans write: with ``metrics_path`` the job runs at
+    most one Spark job more (the tiny metrics append) than without it —
+    no second scan, parse or aggregation of the inputs.  Counted per job
+    group with the StatusTracker, on the benchmark's job shape (docs table
+    + blob path + html)."""
+    from tableextraction_spark.fixtures import gen_corpus
+    from tableextraction_spark.fixtures.html_gen import gen_html_doc
+    from tableextraction_spark.pipeline import (
+        BLOBS_SCHEMA,
+        DOCS_SCHEMA,
+        run_to_parquet,
+    )
+
+    rdocs, blobs, _ = gen_corpus(6, codec="mixed")
+    hdocs, _ = zip(*(gen_html_doc(i) for i in range(6)))
+    docs_path, blobs_path = str(tmp_path / "docs"), str(tmp_path / "blobs")
+    spark.createDataFrame(rdocs + list(hdocs), DOCS_SCHEMA).write.parquet(docs_path)
+    spark.createDataFrame(blobs, BLOBS_SCHEMA).write.parquet(blobs_path)
+    sc = spark.sparkContext
+
+    def jobs(name, metrics_path):
+        sc.setJobGroup(name, name)
+        try:
+            docs = spark.read.parquet(docs_path)
+            run_to_parquet(spark, docs, blobs_path, str(tmp_path / name),
+                           metrics_path=metrics_path, html=True)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    without = jobs("lineage-off", None)
+    with_metrics = jobs("lineage-on", str(tmp_path / "metrics"))
+    assert without >= 1
+    assert with_metrics <= without + 1, (with_metrics, without)

@@ -30,3 +30,21 @@ def test_entry_contract(spark):
     qs, oracles = e.queries(), e.oracle_sql()
     assert set(oracles) <= set(qs)
     assert len(qs) >= 20
+
+
+def test_mirror_catches_one_ulp_float_divergence(spark):
+    """The mirror is as strict as the correctness gate's hash: a double one
+    ulp away from the oracle's value is a mismatch, not a rounding-equal
+    pass."""
+    import math
+
+    import duckdb
+
+    con = duckdb.connect()
+    sql = "SELECT 0.3::DOUBLE AS x"
+    for got, want_ok in ((0.3, True), (math.nextafter(0.3, 1.0), False)):
+        def fn(spark, _sf, got=got):
+            return spark.createDataFrame([(got,)], "x double")
+
+        ok, detail = check_query(spark, con, fn, sql, SF_DIR)
+        assert ok is want_ok, detail
