@@ -5,9 +5,8 @@ spans, ordered, offsets renumbered.
 on the (tiny) table rows + one join + higher-order array functions
 (``transform``/``filter``/``flatten``), fully JVM-side whole-stage-codegen.
 The document's span array is never exploded and the heavy media payloads
-are long gone — only JSON strings shuffle.  :func:`merge_doc_spans` is the
-same merge for one document in Python, for the stateful streaming assembly
-(tests assert the two agree).
+are long gone — only JSON strings shuffle.  Batch and the stateful stream
+(``streaming/stateful_assembly.py``, per micro-batch) both assemble here.
 
 Output invariant (BASELINE.json): spans ordered, ``offset`` = position,
 object spans follow their source media span in ``obj_no`` order with
@@ -95,23 +94,3 @@ def assemble_spans_sql(docs: DataFrame, tables: DataFrame) -> DataFrame:
     )
     return docs.join(tdoc, "doc_id", "left").select("doc_id", _merged_spans_expr())
 
-
-def merge_doc_spans(spans: list[dict], table_rows) -> list[dict]:
-    """One document's merge: original spans + (media_ref, obj_no, okind,
-    payload) object rows → final renumbered span list.  The python-side
-    mirror of :func:`_merged_spans_expr`, used by the stateful streaming
-    assembly."""
-    by_ref: dict[str, list] = {}
-    for media_ref, _obj_no, okind, payload in sorted(table_rows):
-        by_ref.setdefault(media_ref, []).append((okind, payload))
-    merged = []
-    for s in sorted(spans, key=lambda s: s["offset"]):
-        merged.append(
-            {"kind": s["kind"], "text": s["text"], "media_ref": s["media_ref"]}
-        )
-        if s["kind"] == "media":
-            for okind, payload in by_ref.get(s["media_ref"], []):
-                merged.append(
-                    {"kind": okind, "text": payload, "media_ref": s["media_ref"]}
-                )
-    return [{**m, "offset": i} for i, m in enumerate(merged)]

@@ -1,4 +1,3 @@
-from .incremental import run_incremental
 from .stateful_assembly import run_stateful
 
-__all__ = ["run_incremental", "run_stateful"]
+__all__ = ["run_stateful"]

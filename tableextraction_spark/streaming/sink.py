@@ -1,4 +1,5 @@
-"""Shared idempotent parquet sink for the streaming paths.
+"""Idempotent parquet sink for the stateful stream (``run_stateful``), and
+the committed-output probe it shares with ``pipeline.run_to_parquet``.
 
 The committed-output doc_id set is read ONCE per run — only the previous
 run's final micro-batch can replay, so a run-start snapshot plus the ids

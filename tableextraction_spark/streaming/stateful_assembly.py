@@ -1,26 +1,25 @@
-"""Stateful streaming assembly: documents whose pages straddle micro-batches.
+"""Stateful streaming extraction: documents whose pages straddle micro-batches.
 
-Closes the v1 limitation documented in ``incremental.py`` (a doc's pages had
-to land in one micro-batch or two partial span rows appeared).  Here the
-page stream feeds ``applyInPandasWithState`` keyed by ``doc_id``: state
-accumulates each page's detected objects plus the set of pages seen, and the
-document's span row is emitted exactly once — when the seen-page count
+The page stream feeds ``applyInPandasWithState`` keyed by ``doc_id``.  The
+state function only GROUPS: it buffers each doc's detected-object rows
+(``TABLES_SCHEMA``: page markers, error rows and objects, unfiltered) plus
+the set of pages seen, and emits the buffered rows once the seen-page count
 reaches the page count the document's own media spans declare (the
 completeness check; the expected count rides in on a stream-static join with
 the docs table).  No watermark clock is needed because completeness is
 structural, not temporal: a doc with pages in flight simply stays in state.
 
-Plumbing per SURVEY §2.10: the decode stage is the same fused ``mapInArrow``
-as batch; only the assembly differs (per-doc state instead of a groupBy).
-Error pages count toward completeness but contribute no object spans —
-identical to the batch path, which drops error rows at assembly.
+Each micro-batch then runs the batch job's own Catalyst assembly,
+``assemble_spans_sql(docs ⋉ batch, batch)``, so batch and stream share one
+assembly (it drops markers and error rows, so error pages count toward
+completeness but contribute no object spans).  Span text never passes
+through state.  The decode stage is the same fused ``mapInArrow`` as batch.
 
 ``html=True`` extracts main content from markup spans exactly like batch:
 the docs table is rewritten ONCE per run (in-place span replacement,
 `operators/html_extract.py::rewrite_html_spans` — zero-shuffle) before it
-feeds both the text-only batch write and the stream-static join, so state
-carries already-clean spans and the state schema is unchanged.  By default
-the completeness check counts ORIGINAL media spans (the rewrite's
+feeds both the text-only batch write and the micro-batch assembly.  By
+default the completeness check counts ORIGINAL media spans (the rewrite's
 ``n_pages`` column), never html-extracted ``<img>`` spans — a dangling
 <img> ref (the normal web case) would deadlock the doc in state.  The
 default streaming semantic is therefore: html-extracted media spans do not
@@ -32,66 +31,39 @@ stream: completeness then counts media spans of the REWRITTEN document
 native pages, and the output matches the batch pipeline's for the same doc.
 Blob rows backing html refs must carry doc_id and a page_no distinct within
 the doc, like native pages.
+
+``trigger(availableNow=True)`` drains everything pending and stops, which is
+both the test mode and the production catch-up mode.
 """
 
 from __future__ import annotations
-
-import json
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators import TABLES_SCHEMA
-from ..operators.assemble import SPANS_SCHEMA, merge_doc_spans
+from ..operators import TABLES_SCHEMA, assemble_spans_sql
 from ..operators.decode_detect import make_decode_detect_ocr
 from ..pipeline import BLOBS_SCHEMA
 
-STATE_SCHEMA = (
-    "seen array<int>, objs array<string>, n_pages int, spans_json string"
-)
+_COLUMNS = [f.split()[0] for f in TABLES_SCHEMA.split(", ")]
+STATE_SCHEMA = f"seen array<int>, rows array<struct<{TABLES_SCHEMA}>>, n_pages int"
 
 
 def _update_doc(key, pdfs, state: GroupState):
-    (doc_id,) = key
-    if state.exists:
-        seen_l, objs, n_pages, spans_json = state.get
-        seen = set(seen_l)
-        objs = list(objs)
-    else:
-        seen, objs, n_pages, spans_json = set(), [], None, None
+    seen, rows, n_pages = state.get if state.exists else ([], [], None)
+    seen, rows = set(seen), list(rows)
     for pdf in pdfs:
-        for row in pdf.itertuples(index=False):
-            n_pages = int(row.n_pages)
-            spans_json = row.spans_json
-            seen.add(int(row.page_no))  # markers/errors/objects all mark the page
-            # null error arrives as None or NaN depending on the pandas dtype
-            has_error = isinstance(row.error, str) and bool(row.error)
-            if row.obj_no >= 0 and not has_error:
-                objs.append(
-                    json.dumps(
-                        [row.media_ref, int(row.obj_no), row.kind, row.payload]
-                    )
-                )
+        # every row carries the doc's n_pages; max() also takes an empty chunk
+        n_pages = max(pdf["n_pages"], default=n_pages)
+        seen.update(pdf["page_no"])  # markers/errors/objects all mark the page
+        rows += pdf[_COLUMNS].itertuples(index=False, name=None)
     if n_pages is not None and len(seen) >= n_pages:
-        # to_json DROPS null fields — normalize every span so a production
-        # doc with a null text/media_ref can't KeyError the state function
-        # (which would crash-loop on the same checkpointed state forever)
-        spans = [
-            {
-                "kind": s.get("kind", ""),
-                "text": s.get("text", ""),
-                "media_ref": s.get("media_ref", ""),
-                "offset": s.get("offset", i),
-            }
-            for i, s in enumerate(json.loads(spans_json))
-        ]
-        merged = merge_doc_spans(spans, [tuple(json.loads(o)) for o in objs])
         state.remove()
-        yield pd.DataFrame([{"doc_id": doc_id, "spans": merged}])
+        yield pd.DataFrame(rows, columns=_COLUMNS)
     else:
-        state.update((sorted(seen), objs, n_pages, spans_json))
+        state.update((sorted(seen), rows, n_pages))
 
 
 def run_stateful(
@@ -115,7 +87,6 @@ def run_stateful(
     documents stay in the state store and complete on a later run against
     the same checkpoint.
     """
-    from ..operators import assemble_spans_sql
     from .sink import IdempotentSink
 
     # Dedup set = run-start committed snapshot + ids appended within this
@@ -127,47 +98,32 @@ def run_stateful(
     # deployment.)
     sink = IdempotentSink(spark, out_path)
 
+    # ``base``: docs (html spans already replaced by the zero-shuffle
+    # rewrite) with n_pages, the page count completeness waits for.
+    # null-safe: NULL spans size to -1/NULL and would match neither the ==0
+    # (text-only emit) nor the >0 (state) branch — the doc would silently
+    # vanish; batch emits it with NULL spans
+    n_media = (
+        F.when(F.col("spans").isNull(), F.lit(0))
+        .otherwise(F.expr("size(filter(spans, s -> s.kind = 'media'))"))
+    )
+    if html:
+        from ..operators.html_extract import rewrite_html_spans
+
+        docs = rewrite_html_spans(docs)
+    # default: the rewrite's ORIGINAL media-span count (html-extracted <img>
+    # spans have no blob pages behind them); attach_html_media: the
+    # REWRITTEN doc's media spans gate like native pages (module docstring)
+    n_pages = F.col("n_pages") if html and not attach_html_media else n_media
+    # the static side of a stream-static join is re-evaluated every
+    # micro-batch — cache it so the DOM parse runs once per run, not per batch
+    base = docs.select("doc_id", "spans", n_pages.alias("n_pages")).persist()
+
     # Text-only documents (zero media spans) never appear in the blobs
     # stream, so state-based completeness would silently drop them; emit
     # NEW ones batch-side every run (late arrivals included).  Pruning
     # BEFORE assembly keeps the steady-state run O(committed-id scan) when
     # nothing new arrived.
-    # ``base``: docs with html spans already replaced (zero-shuffle rewrite)
-    # and n_pages = ORIGINAL media-span count (completeness must not count
-    # html-extracted <img> spans — no blob pages back them)
-    if html and attach_html_media:
-        from ..operators.html_extract import rewrite_html_spans
-
-        # opt-in (see module docstring): completeness counts the REWRITTEN
-        # doc's media spans — html-extracted <img> refs gate like native
-        # pages and their blobs' detected tables attach.  A dangling ref
-        # holds the doc in state forever; the caller opted into that trade.
-        base = rewrite_html_spans(docs).select(
-            "doc_id",
-            "spans",
-            F.when(F.col("spans").isNull(), F.lit(0))
-            .otherwise(F.expr("size(filter(spans, s -> s.kind = 'media'))"))
-            .alias("n_pages"),
-        )
-    elif html:
-        from ..operators.html_extract import rewrite_html_spans
-
-        base = rewrite_html_spans(docs).select("doc_id", "spans", "n_pages")
-    else:
-        base = docs.select(
-            "doc_id",
-            "spans",
-            # null-safe: NULL spans size to -1/NULL and would match neither
-            # the ==0 (text-only emit) nor the >0 (state) branch — the doc
-            # would silently vanish; batch emits it with NULL spans
-            F.when(F.col("spans").isNull(), F.lit(0))
-            .otherwise(F.expr("size(filter(spans, s -> s.kind = 'media'))"))
-            .alias("n_pages"),
-        )
-    # the static side of a stream-static join is re-evaluated every
-    # micro-batch — cache it so the DOM parse runs once per run, not per batch
-    base = base.persist()
-
     text_only = base.where(F.col("n_pages") == 0).select("doc_id", "spans")
     if sink.committed is not None:
         text_only = text_only.join(sink.committed, "doc_id", "left_anti")
@@ -182,35 +138,37 @@ def run_stateful(
     tables = stream.select(
         "doc_id", "media_ref", "page_no", "content"
     ).mapInArrow(make_decode_detect_ocr(classify), TABLES_SCHEMA)
-    docinfo = base.select(
-        "doc_id",
-        F.to_json("spans").alias("spans_json"),
-        "n_pages",
-    ).where(
-        # text-only docs are handled batch-side above; if a stray blob row
-        # carried their doc_id, state's `seen >= 0` would emit a duplicate
-        F.col("n_pages") > 0
-    )
-    merged = (
-        tables.join(docinfo, "doc_id")  # stream-static join
+    completed = (
+        # stream-static join; text-only docs are handled batch-side above —
+        # if a stray blob row carried their doc_id, state's `seen >= 0`
+        # would emit a duplicate
+        tables.join(base.select("doc_id", "n_pages").where("n_pages > 0"), "doc_id")
         .groupBy("doc_id")
         .applyInPandasWithState(
             _update_doc,
-            SPANS_SCHEMA,
+            TABLES_SCHEMA,
             STATE_SCHEMA,
             "append",
             GroupStateTimeout.NoTimeout,
         )
     )
+
+    def write_batch(batch: DataFrame, _epoch: int) -> None:
+        # read twice below: persist so the state operator runs once
+        batch.persist()
+        try:
+            done = base.join(batch.select("doc_id"), "doc_id", "left_semi")
+            sink.append_new_docs(assemble_spans_sql(done, batch))
+        finally:
+            batch.unpersist()
+
     # foreachBatch + the idempotent sink, NOT the parquet streaming sink:
     # that sink's _spark_metadata log makes the directory readable only
     # through the log (hiding the batch-written text-only rows), and the
     # dedup anti-joins restore the idempotent replay a blind append loses
     try:
         (
-            merged.writeStream.foreachBatch(
-                lambda batch_df, _epoch: sink.append_new_docs(batch_df)
-            )
+            completed.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()

@@ -286,14 +286,14 @@ def test_stateful_streaming_html_split_pages(spark, tmp_path):
     ]
 
 
-def test_incremental_streaming_html(spark, tmp_path):
-    """run_incremental(html=True): per-batch docs get their markup spans
+def test_stateful_streaming_html(spark, tmp_path):
+    """run_stateful(html=True): streamed docs get their markup spans
     replaced, same as batch."""
     from tableextraction_spark.fixtures.html_gen import (
         expected_block_spans,
         plan_html_doc,
     )
-    from tableextraction_spark.streaming.incremental import run_incremental
+    from tableextraction_spark.streaming.stateful_assembly import run_stateful
 
     rdocs, blobs, rexp = gen_corpus(2)
     h_in, _ = gen_html_doc(9)
@@ -306,7 +306,7 @@ def test_incremental_streaming_html(spark, tmp_path):
     blobs_dir = str(tmp_path / "blobs_in")
     spark.createDataFrame(blobs, BLOBS_SCHEMA).coalesce(1).write.parquet(blobs_dir)
     out = str(tmp_path / "spans_out")
-    run_incremental(spark, blobs_dir, docs_df, out, str(tmp_path / "ckpt"), html=True)
+    run_stateful(spark, blobs_dir, docs_df, out, str(tmp_path / "ckpt"), html=True)
 
     rows = spark.read.parquet(out).collect()
     got = {
@@ -392,10 +392,10 @@ def test_null_spans_doc_survives_rewrite(spark):
     assert [(s.kind, s.text) for s in rows["ok"].spans] == [("text", "x")]
 
 
-def test_incremental_emits_blobless_docs(spark, tmp_path):
-    """run_incremental must emit docs that never appear in the blob stream
+def test_stateful_emits_blobless_docs(spark, tmp_path):
+    """run_stateful must emit docs that never appear in the blob stream
     (markup-only / text-only) — previously they were dropped forever."""
-    from tableextraction_spark.streaming.incremental import run_incremental
+    from tableextraction_spark.streaming.stateful_assembly import run_stateful
 
     rdocs, blobs, rexp = gen_corpus(2)
     hdoc, hexp = gen_html_doc(5)         # markup-only: no media spans
@@ -405,7 +405,7 @@ def test_incremental_emits_blobless_docs(spark, tmp_path):
     blobs_dir = str(tmp_path / "blobs_in")
     spark.createDataFrame(blobs, BLOBS_SCHEMA).coalesce(1).write.parquet(blobs_dir)
     out = str(tmp_path / "spans_out")
-    run_incremental(spark, blobs_dir, docs_df, out, str(tmp_path / "ckpt"), html=True)
+    run_stateful(spark, blobs_dir, docs_df, out, str(tmp_path / "ckpt"), html=True)
 
     rows = {r.doc_id: r for r in spark.read.parquet(out).collect()}
     assert set(rows) == {d["doc_id"] for d in rdocs} | {hdoc["doc_id"], "textonly"}
@@ -414,14 +414,13 @@ def test_incremental_emits_blobless_docs(spark, tmp_path):
     assert [(s.kind, s.text) for s in rows["textonly"].spans] == [("text", "just text")]
 
     # rerun = no duplicates
-    run_incremental(spark, blobs_dir, docs_df, out, str(tmp_path / "ckpt"), html=True)
+    run_stateful(spark, blobs_dir, docs_df, out, str(tmp_path / "ckpt"), html=True)
     assert spark.read.parquet(out).count() == 4
 
 
 def test_streaming_emits_null_spans_docs(spark, tmp_path):
-    """A NULL-spans doc (batch emits it) must also come out of both
-    streaming modes instead of vanishing in the media-count filters."""
-    from tableextraction_spark.streaming.incremental import run_incremental
+    """A NULL-spans doc (batch emits it) must also come out of the stream
+    instead of vanishing in the media-count filters."""
     from tableextraction_spark.streaming.stateful_assembly import run_stateful
 
     rdocs, blobs, _ = gen_corpus(1)
@@ -430,10 +429,6 @@ def test_streaming_emits_null_spans_docs(spark, tmp_path):
     )
     blobs_dir = str(tmp_path / "blobs_in")
     spark.createDataFrame(blobs, BLOBS_SCHEMA).coalesce(1).write.parquet(blobs_dir)
-
-    out1 = str(tmp_path / "out_inc")
-    run_incremental(spark, blobs_dir, docs_df, out1, str(tmp_path / "ck1"), html=True)
-    assert "nullguy" in {r.doc_id for r in spark.read.parquet(out1).collect()}
 
     out2 = str(tmp_path / "out_st")
     run_stateful(spark, blobs_dir, docs_df, out2, str(tmp_path / "ck2"), html=True)

@@ -2,19 +2,17 @@
 (and separate runs) still yields exactly ONE correct span row — the
 completeness check holds it in state until every page arrived."""
 
-import json
-
 import pandas as pd
 
 from tableextraction_spark.fixtures import gen_corpus
-from tableextraction_spark.operators import TABLES_SCHEMA, assemble_spans_sql
+from tableextraction_spark.operators import TABLES_SCHEMA
 from tableextraction_spark.pipeline import BLOBS_SCHEMA, DOCS_SCHEMA
 from tableextraction_spark.streaming.stateful_assembly import _update_doc, run_stateful
 
 
 def _tuples(rows):
     return {
-        r.doc_id: [
+        r.doc_id: None if r.spans is None else [
             (s.kind, s.text, s.media_ref, s.offset)
             for s in sorted(r.spans, key=lambda s: s.offset)
         ]
@@ -35,77 +33,119 @@ def _span(kind, text, offset, media_ref=""):
     return {"kind": kind, "text": text, "media_ref": media_ref, "offset": offset}
 
 
-# crafted docs: a raw html span next to a media page; out-of-order offsets;
-# a media page with two objects (listed out of obj_no order) and one with
-# none; page markers (obj_no = -1) and error rows that must not become spans
-_MERGE_DOCS = {
-    "d1": [
-        _span("text", "intro", 0),
-        _span("html", "<p>raw</p>", 1),
-        _span("media", "", 2, "m1"),
-    ],
-    "d2": [
-        _span("text", "tail", 3),
-        _span("media", "", 1, "m3"),
-        _span("text", "head", 0),
-        _span("media", "", 2, "m2"),
-    ],
-    "d3": [_span("media", "", 0, "m4"), _span("html", "<b>x</b>", 1)],
-}
-# (doc_id, media_ref, page_no, obj_no, kind, payload, error)
-_MERGE_OBJS = [
-    ("d1", "m1", 0, -1, None, None, None),
-    ("d1", "m1", 0, 0, "table", '{"t": 1}', None),
-    ("d2", "m2", 1, 1, "plot", '{"p": 2}', None),
-    ("d2", "m2", 1, -1, None, None, None),
-    ("d2", "m2", 1, 0, "table", '{"t": 2}', None),
-    ("d2", "m3", 0, -1, None, None, None),
-    ("d3", "m4", 0, 0, "table", '{"bad": 1}', "ValueError('late')"),
-    ("d3", "m4", 0, -1, None, None, "ValueError('decode')"),
-]
+def _row(**over):
+    row = {"doc_id": "d", "media_ref": "m", "page_no": 0, "obj_no": -1,
+           "kind": None, "n_items": 0, "payload": None, "error": None,
+           "wall_ms": 3}
+    return {**row, **over}
 
 
-class _FreshState:
-    exists = False
+class _State:
+    """In-memory stand-in for GroupState."""
 
-    def update(self, _value):
-        raise AssertionError("every crafted doc is complete in one batch")
+    def __init__(self):
+        self.value = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
 
     def remove(self):
-        pass
+        self.value = None
 
 
-def test_stateful_merge_matches_batch_assembly(spark):
-    """The streaming state function (merge_doc_spans) and the batch
-    Catalyst assembly give the same spans for the same doc and object rows."""
-    rows = [
-        {"doc_id": d, "media_ref": ref, "page_no": pno, "obj_no": obj,
-         "kind": kind, "n_items": 0, "payload": payload, "error": err,
-         "wall_ms": 0}
-        for d, ref, pno, obj, kind, payload, err in _MERGE_OBJS
+def test_update_doc_holds_incomplete_doc_then_emits_rows_unchanged():
+    """The state function only groups: a doc short of its page count stays
+    in state and emits nothing; the page that completes it emits every
+    buffered TABLES_SCHEMA row (markers and errors too) as it came in."""
+    first = [
+        _row(media_ref="m0"),
+        _row(media_ref="m0", obj_no=0, kind="table", n_items=4, payload='{"t": 1}'),
     ]
-    docs_df = spark.createDataFrame(
-        [{"doc_id": d, "spans": spans} for d, spans in _MERGE_DOCS.items()],
-        DOCS_SCHEMA,
-    )
-    batch = _tuples(
-        assemble_spans_sql(docs_df, spark.createDataFrame(rows, TABLES_SCHEMA)).collect()
-    )
+    second = [
+        _row(media_ref="m1", page_no=1, error="ValueError: bad", wall_ms=9),
+    ]
+    state = _State()
 
-    stream = {}
-    for d, spans in _MERGE_DOCS.items():
-        pdf = pd.DataFrame([r for r in rows if r["doc_id"] == d])
-        pdf["spans_json"] = json.dumps(spans)
-        pdf["n_pages"] = sum(s["kind"] == "media" for s in spans)
-        (out,) = _update_doc((d,), [pdf], _FreshState())
-        stream[d] = [
-            (s["kind"], s["text"], s["media_ref"], s["offset"])
-            for s in out.loc[0, "spans"]
-        ]
-    assert stream == batch
-    assert batch["d1"][1] == ("html", "<p>raw</p>", "", 1)
-    assert [k for k, *_ in batch["d2"]] == ["text", "media", "media", "table", "plot", "text"]
-    assert [k for k, *_ in batch["d3"]] == ["media", "html"]
+    def batch(rows):
+        return pd.DataFrame([{**r, "n_pages": 2} for r in rows])
+
+    assert list(_update_doc(("d",), [batch(first)], state)) == []
+    assert state.exists
+    seen, _buffered, n_pages = state.get
+    assert (seen, n_pages) == ([0], 2)
+
+    (out,) = _update_doc(("d",), [batch(second)], state)
+    assert not state.exists
+    assert list(out.columns) == [f.split()[0] for f in TABLES_SCHEMA.split(", ")]
+    assert out.to_dict("records") == first + second
+
+
+def _parity_corpus():
+    """Docs and blob files covering every assembly case the stream meets:
+    doc 1's pages split over two blob files (two micro-batches), a raw html
+    span next to a media page, out-of-order offsets, a null text/media_ref
+    span, a corrupt blob page, a text-only doc and a null-spans doc."""
+    from tableextraction_spark.fixtures.html_gen import gen_html_doc
+
+    docs, blobs, _ = gen_corpus(3)
+    h_in, _ = gen_html_doc(9)
+    markup = next(s["text"] for s in h_in["spans"] if s["kind"] == "html")
+    spans = [dict(s) for s in docs[0]["spans"]]
+    spans.insert(3, _span("html", markup, 0))  # right after media p000
+    spans.append({"kind": "text", "text": None, "media_ref": None, "offset": 0})
+    for i, sp in enumerate(spans):
+        sp["offset"] = i
+    docs[0] = {"doc_id": docs[0]["doc_id"], "spans": spans[::-1]}
+    docs += [
+        {"doc_id": "textonly", "spans": [_span("text", "hello", 1),
+                                         _span("text", "world", 0)]},
+        {"doc_id": "nullspans", "spans": None},
+    ]
+    bad = next(b for b in blobs if b["doc_id"] == "doc-000002" and b["page_no"] == 1)
+    bad["content"] = b"not an image at all"
+    split = [b for b in blobs if b["doc_id"] == "doc-000001"]
+    waves = [[b for b in blobs if b not in split[1:]], split[1:]]
+    return docs, blobs, waves
+
+
+def test_stateful_merge_matches_batch_assembly(spark, tmp_path):
+    """run_stateful's rows equal extract_spans's for the same docs and
+    blobs, with html off and on — the stream assembles with the batch
+    job's own assemble_spans_sql."""
+    from tableextraction_spark.pipeline import extract_spans
+
+    docs, blobs, waves = _parity_corpus()
+    docs_df = spark.createDataFrame(docs, DOCS_SCHEMA)
+    blobs_dir = str(tmp_path / "blobs_in")
+    for wave in waves:
+        spark.createDataFrame(wave, BLOBS_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(blobs_dir)
+    blobs_df = spark.createDataFrame(blobs, BLOBS_SCHEMA)
+    got = {}
+    for html in (False, True):
+        batch = extract_spans(spark, docs_df, blobs_df, html=html).collect()
+        out = str(tmp_path / f"out_{html}")
+        run_stateful(spark, blobs_dir, docs_df, out, str(tmp_path / f"ck_{html}"),
+                     max_files_per_trigger=1, html=html)
+        stream = spark.read.parquet(out).collect()
+        assert len(stream) == len(docs)
+        got[html] = _tuples(stream)
+        assert got[html] == _tuples(batch), f"html={html}"
+    for html in (False, True):
+        assert got[html]["nullspans"] is None
+        assert ("text", None, None) in [t[:3] for t in got[html]["doc-000000"]]
+        assert [t for _k, t, _m, _o in got[html]["textonly"]] == ["world", "hello"]
+    assert "html" in [t[0] for t in got[False]["doc-000000"]]
+    assert "html" not in [t[0] for t in got[True]["doc-000000"]]
 
 
 def test_split_doc_across_microbatches_one_row(spark, tmp_path):
@@ -191,8 +231,10 @@ def test_text_only_doc_emitted_once_across_runs(spark, tmp_path):
 
 
 def test_null_span_fields_survive_state_roundtrip(spark, tmp_path):
-    # to_json drops null fields; the state function must normalize instead
-    # of KeyError-crash-looping on checkpointed state
+    # a span with null text/media_ref comes out of the stream exactly as
+    # batch emits it: nulls stay null
+    from tableextraction_spark.pipeline import extract_spans
+
     docs, blobs, _ = gen_corpus(1)
     assert docs[0]["doc_id"] == "doc-000000"
     docs[0]["spans"][0] = {
@@ -209,8 +251,12 @@ def test_null_span_fields_survive_state_roundtrip(spark, tmp_path):
     run_stateful(spark, blobs_dir, docs_df, out, ckpt)
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 1
+    batch = extract_spans(
+        spark, docs_df, spark.createDataFrame(blobs, BLOBS_SCHEMA)
+    ).collect()
+    assert _tuples(rows) == _tuples(batch)
     first = sorted(rows[0].spans, key=lambda s: s.offset)[0]
-    assert (first.kind, first.text, first.media_ref) == ("text", "", "")
+    assert (first.kind, first.text, first.media_ref) == ("text", None, None)
 
 
 def test_duplicate_blob_file_within_run_single_row(spark, tmp_path):

@@ -1,10 +1,9 @@
-"""Structured-Streaming incremental extraction: files arriving in two waves
-are processed exactly once each, and the union satisfies the span-equality
-invariant."""
+"""Structured-Streaming extraction: files arriving in two waves are processed
+exactly once each, and the union satisfies the span-equality invariant."""
 
 from tableextraction_spark.fixtures import gen_corpus
 from tableextraction_spark.pipeline import BLOBS_SCHEMA, DOCS_SCHEMA
-from tableextraction_spark.streaming import run_incremental
+from tableextraction_spark.streaming import run_stateful
 
 
 def _tuples(rows):
@@ -17,7 +16,7 @@ def _tuples(rows):
     }
 
 
-def test_incremental_two_waves_exactly_once(spark, tmp_path):
+def test_stateful_two_waves_exactly_once(spark, tmp_path):
     docs, blobs, expected = gen_corpus(8)
     docs_df = spark.createDataFrame(docs, DOCS_SCHEMA)
     blobs_dir = str(tmp_path / "blobs_in")
@@ -32,7 +31,7 @@ def test_incremental_two_waves_exactly_once(spark, tmp_path):
     spark.createDataFrame(wave1, BLOBS_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(blobs_dir)
-    run_incremental(spark, blobs_dir, docs_df, out, ckpt)
+    run_stateful(spark, blobs_dir, docs_df, out, ckpt)
     first = spark.read.parquet(out).collect()
     assert {r.doc_id for r in first} == wave1_ids
 
@@ -40,7 +39,7 @@ def test_incremental_two_waves_exactly_once(spark, tmp_path):
     spark.createDataFrame(wave2, BLOBS_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(blobs_dir)
-    run_incremental(spark, blobs_dir, docs_df, out, ckpt)
+    run_stateful(spark, blobs_dir, docs_df, out, ckpt)
     final = spark.read.parquet(out).collect()
 
     # exactly once: 8 docs, no duplicates, all span-equal to golden
@@ -55,5 +54,5 @@ def test_incremental_two_waves_exactly_once(spark, tmp_path):
     assert got == exp
 
     # idempotence: draining a third time with nothing new appends nothing
-    run_incremental(spark, blobs_dir, docs_df, out, ckpt)
+    run_stateful(spark, blobs_dir, docs_df, out, ckpt)
     assert spark.read.parquet(out).count() == 8
